@@ -336,3 +336,39 @@ def test_concurrent_mor_writers_never_lose_updates(spark, tmp_path):
     # every commit is in the log exactly once, seqs strictly increase
     seqs = [s.get("seq", 0) for s in cat.snapshots("t")]
     assert seqs == sorted(seqs) and len(set(seqs)) == len(seqs)
+
+
+@pytest.mark.parametrize("ddl,keys", [
+    ("timestamp", ["2024-01-01 00:00:00", "2024-01-02 12:30:00.123456",
+                   "2024-01-03 00:00:01"]),
+    ("date", ["2024-01-01", "2024-01-02", "2024-01-03"]),
+    ("decimal(18,4)", ["1.5000", "2.2500", "3.0001"]),
+    ("int", ["1", "2", "3"]),
+    ("string", ["a", "b", "c"]),
+])
+def test_mor_merge_on_key_dtype_matches_cow(spark, tmp_path, ddl, keys):
+    """The driver-side delete file must keep the key's parquet type
+    readable: a timestamp key round-tripped through pyarrow as
+    TIMESTAMP(NANOS) committed fine and then failed every read of the
+    head (PARQUET_TYPE_ILLEGAL)."""
+    def frame(rows):
+        return spark.createDataFrame(rows, "k string, v string").select(
+            F.col("k").cast(ddl).alias("k"), "v")
+
+    base = [(keys[0], "a"), (keys[1], "b")]
+    upd = [(keys[1], "B"), (keys[2], "c")]
+    cow = GraphCatalog(str(tmp_path / "cow"))
+    mor = GraphCatalog(str(tmp_path / "mor"))
+    for cat in (cow, mor):
+        cat.merge_table(spark, "t", frame(base), ["k"])
+    cow.merge_table(spark, "t", frame(upd), ["k"])
+    mor.merge_table(spark, "t", frame(upd), ["k"], strategy="mor")
+    got, want = _read(spark, mor, "t"), _read(spark, cow, "t")
+    assert got == want and len(want) == 3
+    want_schema = cow.read_table(spark, "t").schema
+    assert mor.read_table(spark, "t").schema == want_schema
+    # the delete file keys on the table's own type (a tz-naive timestamp
+    # would read back as TIMESTAMP_NTZ and match only under a UTC session)
+    (d,) = mor.latest_snapshot("t")["deletes"]
+    dels = spark.read.parquet(str(tmp_path / "mor" / d["dir"]))
+    assert dels.schema["k"] == want_schema["k"]

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..kernel import templates as T
 from ..operators.mentions import scan_pages
+from ..session import reuse
 from . import triples as PT
 
 P_EXPLOITS = T.UCO_BARE + "ucoexploitsVulnerability"  # decl uco2.ttl:45
@@ -31,7 +32,7 @@ P_EXPLOITS = T.UCO_BARE + "ucoexploitsVulnerability"  # decl uco2.ttl:45
 class KgDims:
     """All dimension DataFrames + alias rows, built once per job.
 
-    Every dim is ``localCheckpoint``-ed eagerly at construction:
+    Every dim is materialized eagerly (``session.reuse``) at construction:
     ``spark.createDataFrame(local_rows)`` yields a Python-parallelized
     ``Scan ExistingRDD`` whose every plan reference re-runs Python workers
     to unpickle the rows, with the pickled partition data embedded in each
@@ -39,7 +40,7 @@ class KgDims:
     dims 4+ times → hundreds of Python-eval tasks per broadcast subquery
     (measured: 201-task broadcast stages, ~0.85 s/task deserialization,
     G1 humongous allocations, and bimodal 2-5× wall variance from Python
-    worker-pool contention). After the checkpoint each dim is a stored
+    worker-pool contention). Once materialized each dim is a stored
     JVM-row scan: no Python re-eval, tiny task binaries. One-time cost
     ~13 small jobs at init, amortized over the whole job. On a real
     multi-executor cluster the dims would instead be read from parquet
@@ -49,30 +50,15 @@ class KgDims:
         from ..fixtures import dicts as D
         from ..sources import dims as S
 
-        # localCheckpoint blocks live only on current executors: safe in
-        # local mode (one JVM, no executor loss), but on a real cluster a
-        # lost executor permanently loses dim blocks mid-job. There, dims
-        # come from parquet reference tables anyway; until then, fall back
-        # to a replicated persist that survives single-executor loss.
-        is_local = spark.sparkContext.master.startswith("local")
-
-        def _mat(df):
-            if is_local:
-                return df.localCheckpoint(eager=True)
-            from pyspark import StorageLevel
-
-            df = df.persist(StorageLevel.MEMORY_AND_DISK_2)
-            df.count()
-            return df
-
-        self.cve = _mat(S.dim_cve(spark))
-        self.cwe = _mat(S.dim_cwe(spark))
-        self.cpe = _mat(S.dim_cpe(spark))
-        self.cpe_vp = _mat(S.dim_cpe_by_vendor_product(spark))
+        self.cve = reuse(S.dim_cve(spark), eager=True)
+        self.cwe = reuse(S.dim_cwe(spark), eager=True)
+        self.cpe = reuse(S.dim_cpe(spark), eager=True)
+        self.cpe_vp = reuse(S.dim_cpe_by_vendor_product(spark), eager=True)
         ents, rels = S.dim_attack(spark)
-        self.attack_ents, self.attack_rels = _mat(ents), _mat(rels)
-        self.capec = _mat(S.dim_capec(spark))
-        self.d3fend = _mat(S.dim_d3fend(spark))
+        self.attack_ents = reuse(ents, eager=True)
+        self.attack_rels = reuse(rels, eager=True)
+        self.capec = reuse(S.dim_capec(spark), eager=True)
+        self.d3fend = reuse(S.dim_d3fend(spark), eager=True)
         self.alias_rows = D.alias_table()
 
 

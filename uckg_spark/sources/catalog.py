@@ -188,17 +188,20 @@ def _collect_file_stats(abs_dir: str) -> dict:
                 col = md.row_group(rg).column(ci)
                 name = col.path_in_schema
                 st = col.statistics
-                if (st is None or not st.has_min_max
-                        or not isinstance(st.min, (int, float, str))
-                        or isinstance(st.min, bool)):
+                try:
+                    lo = st.min if st is not None and st.has_min_max else None
+                except NotImplementedError:  # e.g. INT64-backed decimals
+                    lo = None
+                if (not isinstance(lo, (int, float, str))
+                        or isinstance(lo, bool)):
                     cols.pop(name, None)
                     ok.discard(name)
                     continue
                 if rg == 0:
-                    cols[name] = [st.min, st.max]
+                    cols[name] = [lo, st.max]
                     ok.add(name)
                 elif name in ok:
-                    cols[name][0] = min(cols[name][0], st.min)
+                    cols[name][0] = min(cols[name][0], lo)
                     cols[name][1] = max(cols[name][1], st.max)
         # a column must have stats in EVERY row group to be prunable
         cols = {c: v for c, v in cols.items() if c in ok}
@@ -496,9 +499,19 @@ class GraphCatalog:
         round-trips the types Spark just wrote), same set semantics
         (``group_by`` dedup), and the reader side is a plain
         ``spark.read.parquet`` either way."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         keys = pq.read_table(data_abs_dir, columns=list(key_cols))
+        # Spark writes TimestampType as INT96, which pyarrow reads as a
+        # tz-naive timestamp[ns]; written back as-is that becomes
+        # TIMESTAMP(NANOS), a type Spark refuses to read, and the commit
+        # would poison every later read of the head. UTC-adjusted micros
+        # read back as the same TimestampType.
+        keys = keys.cast(pa.schema([
+            f.with_type(pa.timestamp("us", tz="UTC"))
+            if f.type == pa.timestamp("ns") else f
+            for f in keys.schema]))
         uniq = keys.group_by(list(key_cols)).aggregate([])
         rel = os.path.join(table, f"del-{uuid.uuid4().hex[:12]}")
         abs_dir = os.path.join(self.root, rel)

@@ -96,11 +96,6 @@ D3FEND_SCHEMA = _schema([
     ("off_tech_id", _S),
 ])
 
-ALIAS_SCHEMA = _schema([
-    ("surface_form", _S), ("canonical_id", _S), ("kind", _S),
-    ("prior", Ty.DoubleType()),
-])
-
 
 # ---------------------------------------------------------------------------
 # builders
@@ -217,9 +212,3 @@ def dim_d3fend(spark: SparkSession) -> DataFrame:
              d["rdfs:label"], d["off_tech_id"])
             for d in D.dict_d3fend()]
     return spark.createDataFrame(rows, D3FEND_SCHEMA)
-
-
-def dim_alias(spark: SparkSession) -> DataFrame:
-    rows = [(a["surface_form"], a["canonical_id"], a["kind"], a["prior"])
-            for a in D.alias_table()]
-    return spark.createDataFrame(rows, ALIAS_SCHEMA)
