@@ -575,11 +575,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_resize_images(spark, sf):
         # the 'resize' leg of the multimodal plumbing: Arrow-batched
-        # thumbnail resample to 4x4 RGB. Driver payloads are text (not
-        # PNG) so every row takes the deterministic digest-cycled
-        # fallback — the SQL-twin-able path, same convention as
-        # extract_features; the REAL decode+exact-box-resample path is
-        # pinned by tests/test_scale_operators.py on hand-built PNGs.
+        # thumbnail resample to 4x4 RGB. Every row gets the
+        # deterministic digest-cycled stand-in — the SQL-twin-able path,
+        # same convention as extract_features.
         from uckg_spark.operators.multimodal import resize_images
 
         docs = _t(spark, sf, "documents")
@@ -1275,9 +1273,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # total token count = sum of per-doc array sizes: one map-side
         # aggregate instead of materializing the exploded stream just to
         # count it (explode drops nothing size() counts — empty arrays
-        # contribute 0 rows and 0 alike)
+        # contribute 0 rows and 0 alike). A null text explodes to no
+        # rows; array_size of it is NULL, which sum skips, where size()
+        # would give -1 with ANSI off.
         total = docs.agg(
-            F.sum(F.size(tokens(F.col("text")))).alias("n")
+            F.sum(F.array_size(tokens(F.col("text")))).alias("n")
         ).collect()[0][0] or 0
         return cms_heavy_hitters(
             toks, "value", threshold=max(1, total // 50), width=256)

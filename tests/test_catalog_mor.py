@@ -8,6 +8,7 @@ while writing only O(|changes|) per merge."""
 import pytest
 from pyspark.sql import functions as F
 
+from uckg_spark.sources import catalog
 from uckg_spark.sources.catalog import GraphCatalog
 
 
@@ -338,19 +339,34 @@ def test_concurrent_mor_writers_never_lose_updates(spark, tmp_path):
     assert seqs == sorted(seqs) and len(set(seqs)) == len(seqs)
 
 
-@pytest.mark.parametrize("ddl,keys", [
+_KEY_DTYPES = [
     ("timestamp", ["2024-01-01 00:00:00", "2024-01-02 12:30:00.123456",
                    "2024-01-03 00:00:01"]),
     ("date", ["2024-01-01", "2024-01-02", "2024-01-03"]),
     ("decimal(18,4)", ["1.5000", "2.2500", "3.0001"]),
     ("int", ["1", "2", "3"]),
     ("string", ["a", "b", "c"]),
+]
+
+
+# second axis: the merge's delete file is written by pyarrow (default
+# threshold, id ``<ddl>-keys<i>``) or by a Spark job (threshold 0, id
+# suffixed ``-spark_delete``)
+@pytest.mark.parametrize("ddl,keys,delete_max_rows", [
+    pytest.param(ddl, keys, max_rows, id=f"{ddl}-keys{i}{suffix}")
+    for max_rows, suffix in ((None, ""), (0, "-spark_delete"))
+    for i, (ddl, keys) in enumerate(_KEY_DTYPES)
 ])
-def test_mor_merge_on_key_dtype_matches_cow(spark, tmp_path, ddl, keys):
-    """The driver-side delete file must keep the key's parquet type
+def test_mor_merge_on_key_dtype_matches_cow(spark, tmp_path, monkeypatch,
+                                            ddl, keys, delete_max_rows):
+    """Either delete-file writer must keep the key's parquet type
     readable: a timestamp key round-tripped through pyarrow as
     TIMESTAMP(NANOS) committed fine and then failed every read of the
     head (PARQUET_TYPE_ILLEGAL)."""
+    if delete_max_rows is not None:
+        monkeypatch.setattr(catalog, "_MOR_DRIVER_DELETE_MAX_ROWS",
+                            delete_max_rows)
+
     def frame(rows):
         return spark.createDataFrame(rows, "k string, v string").select(
             F.col("k").cast(ddl).alias("k"), "v")

@@ -79,3 +79,35 @@ def test_cms_ignores_nulls(spark):
     got = {(r["value"], r["n"]) for r in
            cms_heavy_hitters(df, "value", threshold=2).collect()}
     assert got == {("a", 2)}
+
+
+def test_heavy_hitters_query_null_text_with_ansi_off(spark, tmp_path):
+    """The ``heavy_hitters`` query's threshold comes from its token total.
+    A null text contributes no tokens, as in the DuckDB twin; with ANSI
+    off ``size(NULL)`` is -1, so each null row used to drop the total by
+    one. Here 100 real tokens and one null row move ``total // 50`` from
+    2 to 1, which would let the singleton tokens through."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry_mod
+
+    pq.write_table(pa.table({
+        "doc_id": [1, 2],
+        "text": [" ".join(["a"] * 98 + ["b", "c"]), None],
+    }), str(tmp_path / "documents.parquet"))
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"'{tmp_path}/documents.parquet'")
+    want = set(con.execute(entry_mod.oracle_sql()["heavy_hitters"]).fetchall())
+    assert want == {("a", 98)}
+
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        got = {tuple(r) for r in entry_mod.queries()["heavy_hitters"](
+            spark, str(tmp_path)).select("value", "n").collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert got == want

@@ -461,253 +461,51 @@ class TestMultimodal:
         assert by_kind == {"image": 8, "audio": 4, "video": 6}
         assert all(r["digest"] and r["n_bytes"] > 0 for r in feats)
 
-    @staticmethod
-    def _png(width, height, rows, color=2, filters=None):
-        """Hand-assemble a non-interlaced 8-bit PNG. ``rows`` is a list of
-        raw RGB(A)/grey byte rows; ``filters`` picks the per-scanline
-        filter type (the encoder applies it so the decoder must undo it)."""
-        import struct
-        import zlib
-
-        n_chan = {0: 1, 2: 3, 6: 4}[color]
-
-        def chunk(ctype, data):
-            return (struct.pack(">I", len(data)) + ctype + data
-                    + struct.pack(">I", zlib.crc32(ctype + data)))
-
-        filters = filters or [0] * height
-        out, prev = b"", bytes(width * n_chan)
-        for y, row in enumerate(rows):
-            f = filters[y]
-            enc = bytearray(row)
-            if f == 1:   # sub
-                for x in range(len(row) - 1, n_chan - 1, -1):
-                    enc[x] = (enc[x] - row[x - n_chan]) & 0xFF
-            elif f == 2:  # up
-                for x in range(len(row)):
-                    enc[x] = (enc[x] - prev[x]) & 0xFF
-            elif f == 4:  # paeth (with c=0 at x<n_chan this is max(a,b))
-                from uckg_spark.operators.multimodal import _paeth
-                for x in range(len(row) - 1, -1, -1):
-                    a = row[x - n_chan] if x >= n_chan else 0
-                    c = prev[x - n_chan] if x >= n_chan else 0
-                    enc[x] = (enc[x] - _paeth(a, prev[x], c)) & 0xFF
-            out += bytes([f]) + bytes(enc)
-            prev = row
-        ihdr = struct.pack(">IIBBBBB", width, height, 8, color, 0, 0, 0)
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(out)) + chunk(b"IEND", b""))
-
-    def test_png_decode_real(self):
-        """The image decoder REALLY decodes PNG: exact dimensions, channel
-        means, and unfiltering of sub/up/paeth scanlines."""
-        from uckg_spark.operators.multimodal import _decode_image, decode_png
-
-        # 4x4 RGB, every scanline a different filter type
-        rows = [bytes(range(y * 12, y * 12 + 12)) for y in range(4)]
-        png = self._png(4, 4, rows, color=2, filters=[0, 1, 2, 4])
-        dec = decode_png(png)
-        assert dec["width"] == 4 and dec["height"] == 4 and dec["channels"] == 3
-        flat = b"".join(rows)
-        for ch in range(3):
-            want = sum(flat[i] for i in range(ch, len(flat), 3)) / (255.0 * 16)
-            assert abs(dec["means"][ch] - want) < 1e-12
-        feat = _decode_image(png)
-        assert feat[-1] == 1.0  # decoded-for-real flag
-        assert abs(feat[0] - 4 / 65535.0) < 1e-12
-        assert feat[6] == 3 / 4.0
-
-    def test_wav_decode_real(self):
-        """The audio decoder really parses PCM WAV: rate, duration, and
-        exact amplitude statistics; non-WAV falls back to the sha256 fake."""
-        import hashlib
-        import io
-        import struct
-        import wave
-
-        from uckg_spark.operators.multimodal import _decode_audio, decode_wav
-
-        buf = io.BytesIO()
-        w = wave.open(buf, "wb")
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        samples = [0, 16384, -16384, 32767, -32768, 0, 8192, -8192]
-        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
-        w.close()
-        payload = buf.getvalue()
-
-        dec = decode_wav(payload)
-        assert dec["rate"] == 8000 and dec["channels"] == 1
-        assert dec["n_samples"] == len(samples)
-        want_mean = sum(abs(s) for s in samples) / (len(samples) * 32768.0)
-        assert abs(dec["mean_abs"] - want_mean) < 1e-12
-        assert abs(dec["peak"] - 1.0) < 1e-4  # -32768/32768
-
-        feat = _decode_audio(payload)
-        assert abs(feat[0] - 8000 / 96000.0) < 1e-12
-        assert abs(feat[2] - want_mean) < 1e-12
-
-        junk = b"RIFFnope" * 8
-        d = hashlib.sha256(b"audio:" + junk).digest()
-        assert _decode_audio(junk) == [b / 255.0 for b in d[:4]]
-
-    @staticmethod
-    def _gif(width, height, frames_pixels, colors, per_frame_codes=None):
-        """Hand-assemble an animated GIF (2-color global palette, LZW min
-        code size 2 ⇒ 3-bit codes, CLEAR=4 END=5). By default each frame
-        is encoded with the table-free CLEAR-per-pixel scheme; pass
-        explicit code lists to exercise dictionary growth."""
-        import struct
-
-        def pack_codes(codes, width_bits=3):  # LSB-first per GIF spec
-            acc = nb = 0
-            out = bytearray()
-            for c in codes:
-                acc |= c << nb
-                nb += width_bits
-                while nb >= 8:
-                    out.append(acc & 0xFF)
-                    acc >>= 8
-                    nb -= 8
-            if nb:
-                out.append(acc & 0xFF)
-            return bytes(out)
-
-        gct = b"".join(bytes(c) for c in colors)
-        out = (b"GIF89a" + struct.pack("<HH", width, height)
-               + bytes([0x80, 0, 0]) + gct)
-        for i, px in enumerate(frames_pixels):
-            if i == 1:  # graphic-control extension → exercises block skip
-                out += b"\x21\xf9\x04\x00\x0a\x00\x00\x00"
-            codes = per_frame_codes[i] if per_frame_codes else None
-            if codes is None:
-                codes = [4]
-                for p in px:
-                    codes += [p, 4]
-                codes[-1] = 5
-            data = pack_codes(codes)
-            out += (b"\x2C" + struct.pack("<HHHHB", 0, 0, width, height, 0)
-                    + bytes([2]) + bytes([len(data)]) + data + b"\x00")
-        return out + b"\x3B"
-
-    def test_gif_decode_real(self):
-        """The video decoder REALLY decodes GIF: dimensions, frame count,
-        exact sampled-frame channel means; LZW with dictionary growth and
-        the KwKwK self-reference code; non-GIF falls back to the fake."""
-        import hashlib
-
-        from uckg_spark.operators.multimodal import _decode_video, decode_gif
-
-        colors = [(0, 0, 0), (255, 255, 255)]
-        gif = self._gif(2, 2, [[0, 1, 1, 0], [1, 1, 1, 1]], colors)
-        dec = decode_gif(gif)
-        assert dec["width"] == 2 and dec["height"] == 2 and dec["n_frames"] == 2
-        for ch in range(3):  # 6 white of 8 sampled pixels across 2 frames
-            assert abs(dec["means"][ch] - 0.75) < 1e-12
-        feat = _decode_video(gif)
-        assert len(feat) == 6
-        assert abs(feat[2] - 2 / 255.0) < 1e-12 and abs(feat[3] - 0.75) < 1e-12
-
-        # real LZW stream WITH dictionary growth + the KwKwK case:
-        # pixels [0,0,0,0] encode as CLEAR,0,6,0,END (code 6 is emitted
-        # before the decoder has defined it — the self-reference branch)
-        gif2 = self._gif(2, 2, [[0, 0, 0, 0]], colors,
-                         per_frame_codes=[[4, 0, 6, 0, 5]])
-        dec2 = decode_gif(gif2)
-        assert dec2["n_frames"] == 1 and dec2["means"] == [0.0, 0.0, 0.0]
-
-        junk = b"GIFnope" * 8
-        d = hashlib.sha256(b"video:" + junk).digest()
-        assert _decode_video(junk) == [b / 255.0 for b in d[:6]]
-
     def test_png_fallback_and_spark_path(self, spark):
-        """Non-PNG payloads keep the deterministic sha256 fallback (the
-        oracle contract), and a real PNG flows through the mapInPandas
-        feature extractor end-to-end."""
+        """Payloads no container parser accepts keep the deterministic
+        per-kind sha256 fallback (the oracle contract) — image, audio
+        and video alike, PNG/WAV/GIF-looking bytes included — and the
+        same features come out of the mapInPandas extractor."""
         import hashlib
+
+        import pytest as _pytest
 
         from uckg_spark.operators import multimodal
 
-        junk = b"\xffnot-a-png" * 4
-        d = hashlib.sha256(junk).digest()
-        assert multimodal._decode_image(junk) == [b / 255.0 for b in d[:8]]
+        def fake(salt, payload, dims):
+            d = hashlib.sha256(salt + payload).digest()
+            return [b / 255.0 for b in d[:dims]]
 
-        rows = [bytes([200] * 8) for _ in range(2)]  # 2x2 RGBA, all 200
-        png = self._png(2, 2, rows, color=6)
+        junk = {"image": (b"\x89PNG\r\n\x1a\nnot-a-png" * 4, b"", 8),
+                "audio": (b"RIFFnope" * 8, b"audio:", 4),
+                "video": (b"GIFnope" * 8, b"video:", 6)}
+        for kind, (payload, salt, dims) in junk.items():
+            assert multimodal.MEDIA_DECODERS[kind](payload) == \
+                fake(salt, payload, dims)
+
         media = spark.createDataFrame(
-            [(1, "image", "image/png", bytearray(png), {})],
+            [(i, kind, None, bytearray(payload), {})
+             for i, (kind, (payload, _s, _d)) in enumerate(junk.items())],
             multimodal.MEDIA_SCHEMA)
-        feat = multimodal.extract_features(media).collect()[0]["feature"]
-        assert feat[-1] == 1.0
-        for ch in range(4):
-            assert abs(feat[2 + ch] - 200 / 255.0) < 1e-6
-
-    def test_box_resize_divisible_exact(self):
-        """4x4 grey → 2x2: every output value is exactly the mean of its
-        2x2 block (grey replicated to RGB)."""
-        from uckg_spark.operators.multimodal import box_resize
-
-        px = bytes([
-            0, 10, 100, 110,
-            20, 30, 120, 130,
-            200, 210, 40, 50,
-            220, 230, 60, 70,
-        ])
-        got = box_resize(px, 4, 4, 1, 2, 2)
-        blocks = [(0 + 10 + 20 + 30) / 4, (100 + 110 + 120 + 130) / 4,
-                  (200 + 210 + 220 + 230) / 4, (40 + 50 + 60 + 70) / 4]
-        want = [b / 255.0 for b in blocks for _ in range(3)]
-        assert got == want  # EXACT, not approx
-
-    def test_box_resize_fractional_weights(self):
-        """3x3 → 2x2: non-integer scale — the integer overlap weights
-        are [[4,2],[2,1]]/9 for the top-left cell (hand-computed)."""
-        from uckg_spark.operators.multimodal import box_resize
-
-        p = [7, 50, 3,
-             90, 11, 5,
-             2, 8, 255]
-        got = box_resize(bytes(p), 3, 3, 1, 2, 2)
-        tl = (4 * p[0] + 2 * p[1] + 2 * p[3] + 1 * p[4]) / 9 / 255.0
-        br = (1 * p[4] + 2 * p[5] + 2 * p[7] + 4 * p[8]) / 9 / 255.0
-        assert got[0] == tl and got[9] == br
-        # conservation: weighted total equals the plain pixel mean
-        mean = sum(p) / 9 / 255.0
-        assert abs(sum(got[::3]) / 4 - mean) < 1e-12
-
-    def test_box_resize_rgba_drops_alpha(self):
-        from uckg_spark.operators.multimodal import box_resize
-
-        px = bytes([10, 20, 30, 99] * 4)  # 2x2 RGBA, alpha 99
-        got = box_resize(px, 2, 2, 4, 1, 1)
-        assert got == [10 / 255.0, 20 / 255.0, 30 / 255.0]
+        for r in multimodal.extract_features(media).collect():
+            payload, salt, dims = junk[r["kind"]]
+            assert r["digest"] == hashlib.sha256(payload).hexdigest()
+            assert r["feature"] == _pytest.approx(fake(salt, payload, dims))
 
     def test_resize_images_spark_path(self, spark):
-        """resize_images end-to-end: a real PNG decodes (flag True,
-        true source dims, exact block means); junk falls back to the
-        digest-cycled fake of the SAME shape (flag False, -1 dims)."""
+        """resize_images end-to-end: junk gets the digest-cycled
+        stand-in of the fixed shape (flag False, -1 dims)."""
         import hashlib
 
         from uckg_spark.operators import multimodal
 
-        rows = [bytes([y * 40 + x * 10 for x in range(4) for _ in range(3)])
-                for y in range(4)]  # 4x4 RGB gradient
-        png = self._png(4, 4, rows, color=2)
         junk = b"\xffnot-a-png" * 4
         media = spark.createDataFrame(
-            [(1, "image", "image/png", bytearray(png), {}),
-             (2, "image", "application/junk", bytearray(junk), {})],
+            [(2, "image", "application/junk", bytearray(junk), {})],
             multimodal.MEDIA_SCHEMA)
-        out = {r["media_id"]: r
-               for r in multimodal.resize_images(media, 2, 2).collect()}
-        real, fake = out[1], out[2]
-        assert (real["decoded"], real["src_w"], real["src_h"]) == (True, 4, 4)
-        assert len(real["pixels"]) == 12 == len(fake["pixels"])
-        # top-left cell mean of the gradient: rows 0-1, cols 0-1 → R mean
-        assert real["pixels"][0] == (0 + 10 + 40 + 50) / 4 / 255.0
+        (fake,) = multimodal.resize_images(media, 2, 2).collect()
         d = hashlib.sha256(junk).digest()
-        assert (fake["decoded"], fake["src_w"]) == (False, -1)
+        assert (fake["decoded"], fake["src_w"], fake["src_h"]) == (False, -1, -1)
         assert fake["pixels"] == [d[i % 32] / 255.0 for i in range(12)]
 
 

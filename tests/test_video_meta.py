@@ -1,10 +1,9 @@
-"""MP4 (ISO-BMFF) and WebM (EBML) container-metadata parsing: fixtures
-are hand-assembled byte-exact containers (struct-packed boxes /
-EBML elements), so every extracted field has a known true value.
+"""MP4 (ISO-BMFF) container-metadata parsing: fixtures are
+hand-assembled byte-exact containers (struct-packed boxes), so every
+extracted field has a known true value.
 
-Mirrors the reference's opaque-payload handling the way PNG/GIF/JPEG
-were done: real structural parse, no codec decode (disclosed — the 0.5
-marker in feature dim 5 distinguishes metadata-real from pixel-real).
+Real structural parse, no codec decode (disclosed — the 0.5 marker in
+feature dim 5 distinguishes metadata-real from pixel-real).
 """
 
 import struct
@@ -12,11 +11,7 @@ import struct
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from uckg_spark.operators.multimodal import (
-    _decode_video,
-    parse_mp4,
-    parse_webm,
-)
+from uckg_spark.operators.multimodal import _decode_video, parse_mp4
 
 
 def box(btype: bytes, payload: bytes) -> bytes:
@@ -55,29 +50,6 @@ def make_mp4(width=640, height=360, n_frames=48, timescale=1000,
     return ftyp + moov + mdat
 
 
-def ebml(eid: int, payload: bytes) -> bytes:
-    id_len = (eid.bit_length() + 7) // 8
-    size = len(payload)
-    # encode size as a 2-byte vint (marker 0b01 + 14 bits) — plenty here
-    assert size < (1 << 14)
-    return (eid.to_bytes(id_len, "big")
-            + struct.pack(">H", (1 << 14) | size) + payload)
-
-
-def make_webm(width=1280, height=720, duration_units=1500.0,
-              ts_scale=1_000_000) -> bytes:
-    header = ebml(0x1A45DFA3, ebml(0x4282, b"webm"))  # EBML > DocType
-    info = ebml(0x1549A966,
-                ebml(0x2AD7B1, ts_scale.to_bytes(4, "big"))
-                + ebml(0x4489, struct.pack(">d", duration_units)))
-    video = ebml(0xE0, ebml(0xB0, width.to_bytes(2, "big"))
-                 + ebml(0xBA, height.to_bytes(2, "big")))
-    t_video = ebml(0xAE, ebml(0xD7, b"\x01") + video)
-    t_audio = ebml(0xAE, ebml(0xD7, b"\x02"))
-    tracks = ebml(0x1654AE6B, t_video + t_audio)
-    return header + ebml(0x18538067, info + tracks)
-
-
 def test_mp4_fields_exact():
     got = parse_mp4(make_mp4())
     assert got == {"width": 640, "height": 360, "n_frames": 48,
@@ -104,23 +76,10 @@ def test_mp4_rejects_non_bmff():
     assert parse_mp4(box(b"ftyp", b"isom" + b"\x00" * 8)) is None
 
 
-def test_webm_fields_exact():
-    got = parse_webm(make_webm())
-    assert got == {"width": 1280, "height": 720, "duration_s": 1.5,
-                   "n_tracks": 2, "n_video_tracks": 1}
-
-
-def test_webm_rejects_non_ebml():
-    assert parse_webm(b"RIFF....WEBPVP8 ") is None
-    assert parse_webm(b"") is None
-
-
 def test_decode_video_uses_container_metadata():
     feat = _decode_video(make_mp4())
     assert feat == [640 / 65535.0, 360 / 65535.0, 48 / 65535.0,
                     2.0 / 3600.0, 2 / 16.0, 0.5]
-    feat = _decode_video(make_webm())
-    assert feat[0] == 1280 / 65535.0 and feat[5] == 0.5
     # non-container payloads keep the deterministic sha fallback shape
     fallback = _decode_video(b"opaque codec bytes")
     assert len(fallback) == 6 and fallback != feat
@@ -155,8 +114,6 @@ def test_parse_mp4_never_raises_on_garbage(payload):
     # never throw — executors see truncated/corrupt uploads
     parse_mp4(payload)
     parse_mp4(b"\x00\x00\x00\x10ftyp" + payload)
-    parse_webm(payload)
-    parse_webm(b"\x1aE\xdf\xa3" + payload)
 
 
 def test_extract_features_real_mp4_path(spark):
@@ -164,11 +121,10 @@ def test_extract_features_real_mp4_path(spark):
 
     media = spark.createDataFrame(
         [(1, "video", "video/mp4", make_mp4(), {}),
-         (2, "video", "video/webm", make_webm(), {}),
          (3, "video", "video/x-unknown", b"\xde\xad\xbe\xef" * 16, {})],
         MEDIA_SCHEMA)
     rows = {r["media_id"]: r for r in extract_features(media).collect()}
-    assert rows[1]["feature"][5] == 0.5 and rows[2]["feature"][5] == 0.5
+    assert rows[1]["feature"][5] == 0.5
     assert abs(rows[1]["feature"][0] - 640 / 65535.0) < 1e-6
     assert rows[3]["feature"][5] != 0.5
 
@@ -188,32 +144,6 @@ def test_parse_mp4_empty_stts_box_at_payload_end():
     ftyp = box(b"ftyp", b"isom\x00\x00\x00\x01isom")
     moov = box(b"moov", box(b"trak", mdia))
     parse_mp4(ftyp + moov)  # must not raise
-
-
-def test_parse_webm_unknown_size_segment():
-    """A streamed WebM's Segment uses the all-ones (unknown-size) vint;
-    the walk must treat it as extending to end-of-payload, not abort."""
-    from uckg_spark.operators.multimodal import parse_webm
-
-    # hand-build: EBML header + Segment (unknown size) > Info(TimestampScale)
-    def vint(n):  # 1-byte vint
-        return bytes([0x80 | n])
-
-    def elem(eid_bytes, payload):
-        return eid_bytes + vint(len(payload)) + payload
-
-    info = elem(b"\x15\x49\xa9\x66",
-                elem(b"\x2a\xd7\xb1", (500_000).to_bytes(3, "big")))
-    tracks = elem(b"\x16\x54\xae\x6b", elem(
-        b"\xae", elem(b"\xe0",
-                      elem(b"\xb0", (320).to_bytes(2, "big"))
-                      + elem(b"\xba", (176).to_bytes(2, "big")))))
-    seg = b"\x18\x53\x80\x67" + b"\xff" + info + tracks  # 0xFF = unknown size
-    hdr = elem(b"\x1a\x45\xdf\xa3", b"")
-    meta = parse_webm(hdr + seg)
-    assert meta is not None
-    assert meta["width"] == 320 and meta["height"] == 176
-    assert meta["n_tracks"] == 1 and meta["n_video_tracks"] == 1
 
 
 def test_parse_mp4_multitrack_fields_from_one_track():

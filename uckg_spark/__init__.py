@@ -16,7 +16,8 @@ sources/    catalog shim (parquet + manifest standing in for Iceberg),
 operators/  Spark operators: extraction, mention detection, entity linking,
             canonicalization (salted agg + connected components), dedup
             (exact/minhash/simhash/jaccard), similarity search, text stats,
-            multimodal plumbing, skew helpers.
+            binary-payload plumbing (MP4/MP3 container metadata), skew
+            helpers.
 plans/      triple-emission plans (§2.9 catalog) and the end-to-end
             pages→triples pipeline.
 streaming/  Structured Streaming variant of the ingest path.

@@ -1,2 +1,3 @@
 """Spark operators: extraction, mentions, linking, canonicalization,
-dedup, similarity, text stats, multimodal plumbing, skew helpers."""
+dedup, similarity, text stats, binary-payload plumbing (MP4/MP3
+container metadata), skew helpers."""
